@@ -46,18 +46,16 @@ Design:
 from __future__ import annotations
 
 import json as _json
-import os
 from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.window import Window as W
 
 from redisgears_spark.engine import GearsEngine, GearsError
-from redisgears_spark.streaming.stateful import StatefulStatsRuntime
+from redisgears_spark.streaming.stateful import StatefulRuntime, StatefulSpec
 
 _ANN_OUTPUT_SCHEMA = (
     "cell long, n_vectors bigint, vec_ids array<bigint>, "
@@ -235,7 +233,7 @@ def _make_cell_reducer(max_per_cell: int | None):
     return reducer
 
 
-class StreamingAnnIvfRuntime(StatefulStatsRuntime):
+class StreamingAnnIvfRuntime(StatefulRuntime):
     """Continuously-maintained IVF ANN index over a vector stream.
 
     Records carry the vector as a JSON float array in
@@ -243,7 +241,15 @@ class StreamingAnnIvfRuntime(StatefulStatsRuntime):
     module docstring for the routing/state/exactness contract.
     """
 
-    _SINK_KEY = ("cell",)  # sink snapshots key on the cell space
+    SPEC = StatefulSpec(
+        "ann", "streaming_ann_ivf",
+        lambda rt: _make_cell_reducer(rt.max_per_cell),
+        _ANN_OUTPUT_SCHEMA, _ANN_STATE_SCHEMA,
+        key="cell",
+        router=lambda rt: _make_router(rt.centroids, rt.vec_field, rt.id_field),
+        routed_schema=_ROUTED_SCHEMA,
+        key_cap=lambda rt: len(rt.centroids),  # state keys are the IVF cells
+    )
 
     def __init__(
         self,
@@ -255,77 +261,20 @@ class StreamingAnnIvfRuntime(StatefulStatsRuntime):
         vec_field: str = "vec",
         id_field: str = "vec_id",
         max_per_cell: int | None = None,
-        files_per_trigger: int | None = None,
     ):
-        super().__init__(engine, spool_dir, work_dir, source_adapter,
-                         files_per_trigger=files_per_trigger)
+        super().__init__(engine, spool_dir, work_dir, source_adapter)
         import numpy as np
 
         self.centroids = np.asarray(centroids, dtype="float64")
         self.vec_field = vec_field
         self.id_field = id_field
         self.max_per_cell = max_per_cell
-        # bounded key space: state keys are the IVF cells
-        self._state_key_cap = len(self.centroids)
-
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "ann_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "ann_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        src = self._source()
-        if prefix:
-            src = src.filter(F.col("stream_key").startswith(prefix))
-        routed = src.select("id", "fields").mapInPandas(
-            _make_router(self.centroids, self.vec_field, self.id_field),
-            _ROUTED_SCHEMA,
-        )
-        out = routed.groupBy("cell").applyInPandasWithState(
-            _make_cell_reducer(self.max_per_cell),
-            _ANN_OUTPUT_SCHEMA,
-            _ANN_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        os.makedirs(self.sink_dir, exist_ok=True)
-        sink_dir = self.sink_dir
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(sink_dir)
-
-        with self._sized_state_shuffle():
-            self.query = (
-                out.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", self._ckpt_dir)
-                .outputMode("update")
-                .queryName("streaming_ann_ivf")
-                .start()
-            )
-        return self.query
 
     def inverted_lists(self) -> DataFrame | None:
         """Latest committed inverted list per cell (highest epoch wins —
         update mode re-emits a cell's full list whenever it changes), or
         None before the first commit."""
-        df = self._sink_df()
-        if df is None:
-            return None
-        return (
-            df.groupBy("cell")
-            .agg(
-                F.max_by(
-                    F.struct("n_vectors", "vec_ids", "qs", "nqs"),
-                    F.col("epoch"),
-                ).alias("s")
-            )
-            .select("cell", "s.*")
-        )
+        return self._latest_rows("n_vectors", "vec_ids", "qs", "nqs")
 
     def _scored_candidates(
         self,
@@ -465,16 +414,3 @@ class StreamingAnnIvfRuntime(StatefulStatsRuntime):
             queries, nprobe, exclude_self=False
         )
         return scored.filter(F.col("cosine") >= threshold)
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingAnnIvfRuntime has no per-key stats snapshot — use "
-            "inverted_lists() / topk()"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming ANN runtime "
-            "(state is an index, not per-key stats); use max_per_cell "
-            "for bounded state, stop()/flush() to clear"
-        )

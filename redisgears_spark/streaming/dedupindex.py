@@ -55,18 +55,16 @@ Design:
 from __future__ import annotations
 
 import json as _json
-import os
 import zlib
 from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from redisgears_spark.engine import GearsEngine, GearsError
-from redisgears_spark.streaming.stateful import StatefulStatsRuntime
+from redisgears_spark.streaming.stateful import StatefulRuntime, StatefulSpec
 from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 
 _IDX_OUTPUT_SCHEMA = (
@@ -241,7 +239,7 @@ def _make_bucket_reducer():
     return reducer
 
 
-class StreamingShingleIndexRuntime(StatefulStatsRuntime):
+class StreamingShingleIndexRuntime(StatefulRuntime):
     """Continuously-maintained corpus shingle index over a document
     stream, queryable for incremental batch-vs-corpus dedup.
 
@@ -250,7 +248,15 @@ class StreamingShingleIndexRuntime(StatefulStatsRuntime):
     routing/state/exactness contract.
     """
 
-    _SINK_KEY = ("bucket",)  # sink snapshots key on the bucket space
+    SPEC = StatefulSpec(
+        "shidx", "streaming_shingle_index",
+        lambda rt: _make_bucket_reducer(),
+        _IDX_OUTPUT_SCHEMA, _IDX_STATE_SCHEMA,
+        key="bucket",
+        router=lambda rt: _make_router(rt.text_field, rt.id_field, rt.n_buckets),
+        routed_schema=_ROUTED_SCHEMA,
+        key_cap=lambda rt: rt.n_buckets,  # state keys are the buckets
+    )
 
     def __init__(
         self,
@@ -261,95 +267,33 @@ class StreamingShingleIndexRuntime(StatefulStatsRuntime):
         text_field: str = "text",
         id_field: str = "doc_id",
         n_buckets: int = 64,
-        files_per_trigger: int | None = None,
     ):
-        super().__init__(engine, spool_dir, work_dir, source_adapter,
-                         files_per_trigger=files_per_trigger)
+        super().__init__(engine, spool_dir, work_dir, source_adapter)
         self.text_field = text_field
         self.id_field = id_field
         self.n_buckets = n_buckets
-        self._state_key_cap = n_buckets  # bounded key space (buckets)
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "shidx_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "shidx_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        src = self._source()
-        if prefix:
-            src = src.filter(F.col("stream_key").startswith(prefix))
-        routed = src.select("id", "fields").mapInPandas(
-            _make_router(self.text_field, self.id_field, self.n_buckets),
-            _ROUTED_SCHEMA,
-        )
-        out = routed.groupBy("bucket").applyInPandasWithState(
-            _make_bucket_reducer(),
-            _IDX_OUTPUT_SCHEMA,
-            _IDX_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        os.makedirs(self.sink_dir, exist_ok=True)
-        sink_dir = self.sink_dir
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(sink_dir)
-
-        with self._sized_state_shuffle():
-            self.query = (
-                out.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", self._ckpt_dir)
-                .outputMode("update")
-                .queryName("streaming_shingle_index")
-                .start()
-            )
-        return self.query
-
-    def _latest(self) -> DataFrame | None:
+    def _latest(self) -> DataFrame:
         """Latest committed slice per bucket (highest epoch wins —
-        update mode re-emits a bucket's full slice whenever it changes),
-        or None before the first commit."""
-        df = self._sink_df()
-        if df is None:
-            return None
-        return (
-            df.groupBy("bucket")
-            .agg(
-                F.max_by(
-                    F.struct(
-                        "n_shingles",
-                        "n_docs",
-                        "shingles",
-                        "postings",
-                        "size_ids",
-                        "sizes",
-                    ),
-                    F.col("epoch"),
-                ).alias("s")
-            )
-            .select("bucket", "s.*")
+        update mode re-emits a bucket's full slice whenever it changes);
+        raises before the first commit."""
+        idx = self._latest_rows(
+            "n_shingles", "n_docs", "shingles", "postings", "size_ids", "sizes"
         )
-
-    def postings(self) -> DataFrame:
-        """The live inverted index as (s, base_id) rows — the exploded
-        equi-join side `screen` consumes (JVM-side explode; the index
-        never touches the driver)."""
-        idx = self._latest()
         if idx is None:
             raise GearsError(
                 "streaming shingle index is empty — ingest documents and "
                 "process_available() first"
             )
+        return idx
+
+    def postings(self) -> DataFrame:
+        """The live inverted index as (s, base_id) rows — the exploded
+        equi-join side `screen` consumes (JVM-side explode; the index
+        never touches the driver)."""
         return (
-            idx.select(
-                F.explode(F.arrays_zip("shingles", "postings")).alias("z")
-            )
+            self._latest()
+            .select(F.explode(F.arrays_zip("shingles", "postings")).alias("z"))
             .select(
                 F.col("z.shingles").alias("s"),
                 F.explode(F.col("z.postings")).alias("base_id"),
@@ -358,16 +302,9 @@ class StreamingShingleIndexRuntime(StatefulStatsRuntime):
 
     def doc_sizes(self) -> DataFrame:
         """The live doc-size table as (doc_id, n) rows."""
-        idx = self._latest()
-        if idx is None:
-            raise GearsError(
-                "streaming shingle index is empty — ingest documents and "
-                "process_available() first"
-            )
         return (
-            idx.select(
-                F.explode(F.arrays_zip("size_ids", "sizes")).alias("z")
-            )
+            self._latest()
+            .select(F.explode(F.arrays_zip("size_ids", "sizes")).alias("z"))
             .select(
                 F.col("z.size_ids").alias("doc_id"),
                 F.col("z.sizes").alias("n"),
@@ -434,17 +371,4 @@ class StreamingShingleIndexRuntime(StatefulStatsRuntime):
                 ).alias("containment"),
             )
             .filter(F.col("jaccard") >= min_jaccard)
-        )
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingShingleIndexRuntime has no per-key stats snapshot — "
-            "use postings() / doc_sizes() / screen()"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming shingle index "
-            "(state is an index, not per-key stats); emit `del` "
-            "tombstones to remove documents, stop()/flush() to clear"
         )

@@ -10,6 +10,14 @@ stream_key running totals survive across micro-batches and restarts via the
 checkpoint, exactly like the reference's replicated last-read-id frontier
 (stream_reader.rs:351-363) — but with Spark's WAL doing the replication.
 
+One core, many specs: `StatefulRuntime` owns the only copy of the query
+wiring (source, prefix filter, optional router, state-shuffle width,
+grouped state operator, epoch-stamped sink, checkpoint, stop/flush/
+compaction). Each of the thirteen runtimes — the ten below plus ann.py,
+dedupindex.py and vocab.py — is a `StatefulSpec` (directory and query
+name, reducer factory, schemas, group key or router, key cap, sink kind)
+plus only the read APIs that apply to its sink.
+
 Lifecycle parity:
   * stream deletion (reference lib.rs:1521-1530: `del` of a tracked stream
     drops its consumers' state) → a control record (`__ctl__ = 'del'`)
@@ -29,9 +37,12 @@ per-key state + checkpoint semantics with no extra dependency.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
-from typing import Any, Iterator
+import time
+from dataclasses import dataclass
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -52,7 +63,6 @@ _CTL_FIELD = "__ctl__"
 _CTL_DELETE = "del"
 
 
-
 def _ordered_frame(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
     """Concatenate a group's Arrow chunks and sort ONCE by id.
 
@@ -63,7 +73,10 @@ def _ordered_frame(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
     version did, processed records out of id order across chunks and
     corrupted order-sensitive state (reproduced: a sessionizer fed
     [50,51] then [1,2,3] persisted start=50 > end=3 and missed the gap
-    close). Every reducer below funnels through this."""
+    close). All thirteen reducers call it: the ten in this module
+    (running stats, heavy hitters, sessionize, rate limit, CUSUM, HLL,
+    KMV, quantiles, Bloom dedup, MinHash) and the ANN cell, shingle
+    bucket and word-freq bucket reducers."""
     from redisgears_spark.workerpatch import ensure as _wp
 
     _wp()  # see workerpatch — removes ~130 ms/task of worker preamble
@@ -134,53 +147,91 @@ def _running_stats(
     )
 
 
-class StatefulStatsRuntime:
-    """Owns the stateful running-stats query for a stream source."""
+def _spool_tombstones(spark: SparkSession, spool_dir: str,
+                      key_ids: list[tuple[str, int]]) -> None:
+    """Append one `del` control record per (stream_key, id) to the spool
+    — the deferred-job path for expiry and force-close; drain the query
+    to apply."""
+    from redisgears_spark.streaming.triggers import STREAM_SCHEMA
 
-    # the sink's key column(s): update mode emits one row per touched key
-    # per epoch, so "latest per key" is the live snapshot. Index-shaped
-    # runtimes (ANN cells, shingle/word-freq buckets) override this.
-    _SINK_KEY: tuple[str, ...] = ("stream_key",)
-    # event-log sinks (sessionize, rate-limit, CUSUM, bloom-dedup) append
-    # one row per closed session / per record: every row IS history, the
-    # sink is already O(events), and latest-per-key compaction would
-    # silently destroy it — those runtimes set this True and
-    # compact_sink() refuses (same fail-loud pattern as their latest()).
-    _SINK_EVENT_LOG: bool = False
+    rows = [
+        {
+            "stream_key": key,
+            "id": at_id,
+            "id_ts": pd.Timestamp("2024-01-01"),
+            "fields": {_CTL_FIELD: _CTL_DELETE},
+            "record": None,
+        }
+        for key, at_id in key_ids
+    ]
+    spark.createDataFrame(pd.DataFrame(rows), STREAM_SCHEMA).coalesce(
+        1
+    ).write.mode("append").parquet(spool_dir)
+
+
+@dataclass(frozen=True)
+class StatefulSpec:
+    """What one stateful runtime adds to the shared core — the grouped-map
+    contract plus state: group by `key`, run the reducer on each group's
+    frame, declare the output and state schemas.
+
+    Factories take the runtime instance so they can read its constructor
+    parameters; they run on the driver when the query starts."""
+
+    # directory prefix (`<name>_ckpt`, `<name>_sink`) and query name
+    name: str
+    query: str
+    reducer: Callable[[Any], Callable]
+    out_schema: str
+    state_schema: str
+    # the group key: `stream_key` groups the source as it is; any other
+    # key (an IVF cell, a bucket) is derived per record by the router
+    key: str = "stream_key"
+    # executor-side mapInPandas kernel over the source's (id, fields)
+    # columns, and the schema of the rows it emits
+    router: Callable[[Any], Callable] | None = None
+    routed_schema: str | None = None
+    # size of a bounded key space (see StatefulRuntime._state_partitions)
+    key_cap: Callable[[Any], int] | None = None
+    # sink kind: a snapshot sink re-emits each touched key's full state
+    # per epoch, so latest-per-key is the live state and older epochs can
+    # be compacted away. An event log (sessionize, rate-limit, CUSUM,
+    # bloom-dedup) appends one row per closed session / per record:
+    # every row is history and compact_sink() refuses.
+    event_log: bool = False
+
+
+class StatefulRuntime:
+    """The single copy of the stateful query wiring that every runtime in
+    this module, ann.py, dedupindex.py and vocab.py runs on: source →
+    prefix filter → optional router → state-shuffle sizing → grouped
+    state operator (update mode, NoTimeout) → epoch-stamped parquet
+    sink → checkpoint. A runtime is a `SPEC` plus the read APIs
+    that apply to its sink."""
+
+    SPEC: StatefulSpec
+
+    # micro-batch chunking: spool files admitted per trigger
+    _FILES_PER_TRIGGER = 8
 
     def __init__(self, engine: GearsEngine, spool_dir: str, work_dir: str,
-                 source_adapter=None, files_per_trigger: int | None = None):
+                 source_adapter=None):
         self.engine = engine
         self.spark: SparkSession = engine.spark
         self.spool_dir = spool_dir
         self.work_dir = work_dir
         self.source_adapter = source_adapter
-        # micro-batch chunking: files admitted per trigger. Default 8
-        # (the historical contract every runtime test pins). The
-        # registered streamed twins raise it together with a wider
-        # spool so the ROUTER stage runs at full core count — a
-        # file-stream batch plans one task per file, so an 8-file spool
-        # capped the Arrow router at 8-way parallelism on 32 cores.
-        # `None` means the default; an explicit 0 is a caller bug and
-        # refused loudly rather than silently coerced to 8.
-        if files_per_trigger is not None and files_per_trigger < 1:
-            raise ValueError(
-                f"files_per_trigger must be >= 1, got {files_per_trigger}"
-            )
-        self.files_per_trigger = (
-            8 if files_per_trigger is None else files_per_trigger
-        )
         self.query: StreamingQuery | None = None
-        # wall-clock of each committed epoch, for idle-key expiry
+        # wall-clock of each epoch THIS process committed (in memory only)
         self._epoch_seen: dict[int, float] = {}
 
     @property
     def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "stateful_ckpt")
+        return os.path.join(self.work_dir, f"{self.SPEC.name}_ckpt")
 
     @property
     def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "stateful_sink")
+        return os.path.join(self.work_dir, f"{self.SPEC.name}_sink")
 
     # ---- state-shuffle width (r14, guide §2.2) --------------------------
     #
@@ -203,9 +254,8 @@ class StatefulStatsRuntime:
     # index runtimes — 64 shingle buckets, 32 word-freq buckets, 16 IVF
     # cells) can never use more state tasks than keys; partitions past
     # that open a store, commit an empty delta and write an empty sink
-    # file for nothing. Subclasses with bounded keys set _state_key_cap.
+    # file for nothing. Such specs set `key_cap`.
     _STATE_TASK_INPUT_BYTES = 64 * 1024
-    _state_key_cap: int | None = None
 
     def _spool_bytes(self) -> int:
         total = 0
@@ -220,105 +270,79 @@ class StatefulStatsRuntime:
         return total
 
     def _state_partitions(self) -> int:
-        per_task = int(
-            os.environ.get(
-                "SPARK_GRAFT_STATE_TASK_BYTES", self._STATE_TASK_INPUT_BYTES
-            )
-        )
-        want = -(-self._spool_bytes() // max(1, per_task))  # ceil div
+        want = -(-self._spool_bytes() // self._STATE_TASK_INPUT_BYTES)
         cap = self.spark.sparkContext.defaultParallelism
-        if self._state_key_cap is not None:
-            cap = min(cap, self._state_key_cap)
+        if self.SPEC.key_cap is not None:
+            cap = min(cap, self.SPEC.key_cap(self))
         return max(1, min(cap, want))
 
+    @contextlib.contextmanager
     def _sized_state_shuffle(self):
-        """Context manager pinning spark.sql.shuffle.partitions to the
-        bytes-derived state width for the duration of query start.
-        Structured Streaming clones the session when the query starts
-        (every batch plans on the clone) and records the partition
-        count in the checkpoint's first offset entry, so restoring the
-        session conf right after .start() returns cannot race the
-        stream (pinned by tests/test_streaming_dedup.py's width test)."""
-        import contextlib
-
-        runtime = self
-
-        @contextlib.contextmanager
-        def _pin():
-            conf = runtime.spark.conf
-            prev = conf.get("spark.sql.shuffle.partitions")
-            conf.set(
-                "spark.sql.shuffle.partitions",
-                str(runtime._state_partitions()),
-            )
-            try:
-                yield
-            finally:
-                conf.set("spark.sql.shuffle.partitions", prev)
-
-        return _pin()
+        """Pin spark.sql.shuffle.partitions to the bytes-derived state
+        width for the duration of query start. Structured Streaming
+        clones the session when the query starts (every batch plans on
+        the clone) and records the partition count in the checkpoint's
+        first offset entry, so restoring the session conf right after
+        .start() returns cannot race the stream (pinned by
+        tests/test_streaming_dedup.py's width test)."""
+        conf = self.spark.conf
+        prev = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.shuffle.partitions", str(self._state_partitions()))
+        try:
+            yield
+        finally:
+            conf.set("spark.sql.shuffle.partitions", prev)
 
     def _source(self) -> DataFrame:
         from redisgears_spark.streaming.triggers import STREAM_SCHEMA
 
-        raw_schema = (
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
         if self.source_adapter is not None:
             raw = (
-                self.spark.readStream.schema(raw_schema)
-                .option("maxFilesPerTrigger", self.files_per_trigger)
+                self.spark.readStream.schema(
+                    "event_id bigint, ts timestamp, user_id bigint, "
+                    "event_type string, value double, props string"
+                )
+                .option("maxFilesPerTrigger", self._FILES_PER_TRIGGER)
                 .parquet(self.spool_dir)
             )
             return self.source_adapter(raw)
         return (
             self.spark.readStream.schema(STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", self.files_per_trigger)
+            .option("maxFilesPerTrigger", self._FILES_PER_TRIGGER)
             .parquet(self.spool_dir)
         )
 
-    def _start_stateful(
-        self,
-        reducer,
-        out_schema: str,
-        state_schema: str,
-        name: str,
-        prefix: str = "",
-        track_epochs: bool = False,
-    ) -> StreamingQuery:
-        """Shared start shape for every stateful runtime in this module
-        (stats / heavy-hitters / sessionize / rate-limit): prefix filter,
-        applyInPandasWithState in update mode, epoch-stamped parquet
-        sink, checkpoint. One place for the query wiring — the four
-        runtimes differ only in reducer, schemas, and query name."""
+    def start(self, prefix: str = "") -> StreamingQuery:
+        spec = self.SPEC
         src = self._source()
         if prefix:
             src = src.filter(F.col("stream_key").startswith(prefix))
-        out = src.groupBy("stream_key").applyInPandasWithState(
-            reducer,
-            out_schema,
-            state_schema,
+        if spec.router is not None:
+            src = src.select("id", "fields").mapInPandas(
+                spec.router(self), spec.routed_schema
+            )
+        out = src.groupBy(spec.key).applyInPandasWithState(
+            spec.reducer(self),
+            spec.out_schema,
+            spec.state_schema,
             "update",
             GroupStateTimeout.NoTimeout,
         )
         os.makedirs(self.sink_dir, exist_ok=True)
+        sink_dir, epoch_seen = self.sink_dir, self._epoch_seen
 
         def sink(batch_df: DataFrame, epoch_id: int) -> None:
             batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
                 "append"
-            ).parquet(self.sink_dir)
-            if track_epochs:
-                import time as _time
-
-                self._epoch_seen[epoch_id] = _time.time()
+            ).parquet(sink_dir)
+            epoch_seen[epoch_id] = time.time()
 
         with self._sized_state_shuffle():
             self.query = (
                 out.writeStream.foreachBatch(sink)
                 .option("checkpointLocation", self._ckpt_dir)
                 .outputMode("update")
-                .queryName(name)
+                .queryName(spec.query)
                 .start()
             )
         return self.query
@@ -332,35 +356,38 @@ class StatefulStatsRuntime:
             return None
         return self.spark.read.parquet(self.sink_dir)
 
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _running_stats,
-            _OUTPUT_SCHEMA,
-            _STATE_SCHEMA,
-            "stateful_stats",
-            prefix,
-            track_epochs=True,
-        )
-
-    def latest(self) -> dict[str, dict]:
-        """Most recent state snapshot per stream_key from the sink.
-
-        The snapshot for a key is its row from the highest epoch (update
-        mode emits one row per touched key per epoch). The reduction runs
-        JVM-side — max_by over a struct keyed by epoch — so only one row
-        per distinct key reaches the driver; the sink grows with epochs,
-        the result does not."""
+    def _latest_rows(self, *cols: str) -> DataFrame | None:
+        """Each key's snapshot row from its highest epoch (update mode
+        re-emits a touched key's full state every epoch) as (key, *cols),
+        or None before the first commit. Reduced JVM-side with max_by
+        over a struct keyed by epoch, so the result is one row per key
+        however many epochs the sink holds."""
         df = self._sink_df()
         if df is None:
-            return {}
-        cols = [c for c in df.columns if c != "stream_key"]
-        latest = df.groupBy("stream_key").agg(
-            F.max_by(F.struct(*cols), F.col("epoch")).alias("s")
+            return None
+        key = self.SPEC.key
+        return (
+            df.groupBy(key)
+            .agg(F.max_by(F.struct(*cols), F.col("epoch")).alias("s"))
+            .select(key, "s.*")
         )
-        return {
-            row["stream_key"]: {"stream_key": row["stream_key"], **row["s"].asDict()}
-            for row in latest.collect()
-        }
+
+    def _latest_dicts(self, *cols: str) -> dict[str, dict]:
+        """`_latest_rows(*cols)` on the driver as {key: {col: value}}."""
+        rows = self._latest_rows(*cols)
+        if rows is None:
+            return {}
+        key = self.SPEC.key
+        return {r[key]: {c: r[c] for c in cols} for r in rows.collect()}
+
+    def _log_rows(self, *order: str) -> list[dict]:
+        """Every row of an event-log sink as a dict, sorted by `order`
+        on the driver (each row was emitted exactly once)."""
+        df = self._sink_df()
+        if df is None:
+            return []
+        rows = [r.asDict() for r in df.collect()]
+        return sorted(rows, key=lambda r: tuple(r[c] for c in order))
 
     def process_available(self) -> None:
         if self.query is not None:
@@ -373,44 +400,6 @@ class StatefulStatsRuntime:
             except Exception:
                 pass
             self.query = None
-
-    # -- TTL expiry (expiry-driven events, KeySpace_Triggers.md:11-13) -------
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        """Expire keys idle longer than `ttl_seconds`: emit a `del`
-        tombstone per idle key into the spool, so the stateful operator
-        drops their state through the normal deletion path and the sink
-        records a final `deleted` snapshot. Run as a maintenance step (the
-        reference also defers expiry/trim to post-notification jobs rather
-        than doing it inline). Returns the expired keys; drain the query
-        afterwards to apply."""
-        import time as _time
-
-        now = _time.time()
-        expired = []
-        rows = []
-        for key, rec in self.latest().items():
-            if rec["deleted"]:
-                continue
-            seen = self._epoch_seen.get(rec["epoch"])
-            if seen is not None and now - seen > ttl_seconds:
-                expired.append(key)
-                rows.append(
-                    {
-                        "stream_key": key,
-                        "id": rec["last_id"] + 1,
-                        "id_ts": pd.Timestamp("2024-01-01"),
-                        "fields": {_CTL_FIELD: _CTL_DELETE},
-                        "record": None,
-                    }
-                )
-        if rows:
-            from redisgears_spark.streaming.triggers import STREAM_SCHEMA
-
-            self.spark.createDataFrame(
-                pd.DataFrame(rows), STREAM_SCHEMA
-            ).coalesce(1).write.mode("append").parquet(self.spool_dir)
-        return expired
 
     # -- sink compaction (the trim/maintain() discipline, retention.py) ------
 
@@ -438,7 +427,7 @@ class StatefulStatsRuntime:
         every latest-per-key read. Requires the query to be stopped
         (the sink directory is swapped atomically underneath the
         readers). Returns the row count after compaction."""
-        if self._SINK_EVENT_LOG:
+        if self.SPEC.event_log:
             raise GearsError(
                 f"{type(self).__name__} sink is an event log (one row "
                 "per event, no superseded snapshots) — latest-per-key "
@@ -454,9 +443,9 @@ class StatefulStatsRuntime:
         df = self._sink_df()
         if df is None:
             return 0
-        key_cols = list(self._SINK_KEY)
-        maxe = df.groupBy(*key_cols).agg(F.max("epoch").alias("epoch"))
-        latest = df.join(maxe, key_cols + ["epoch"], "left_semi")
+        key = self.SPEC.key
+        maxe = df.groupBy(key).agg(F.max("epoch").alias("epoch"))
+        latest = df.join(maxe, [key, "epoch"], "left_semi")
         tmp = self.sink_dir + "_compacting"
         shutil.rmtree(tmp, ignore_errors=True)
         # the write materializes `latest` fully before the swap deletes
@@ -475,6 +464,54 @@ class StatefulStatsRuntime:
         self.stop()
         for d in (self._ckpt_dir, self.sink_dir):
             shutil.rmtree(d, ignore_errors=True)
+
+
+class StatefulStatsRuntime(StatefulRuntime):
+    """Owns the stateful running-stats query for a stream source."""
+
+    SPEC = StatefulSpec(
+        "stateful", "stateful_stats", lambda rt: _running_stats,
+        _OUTPUT_SCHEMA, _STATE_SCHEMA,
+    )
+
+    def latest(self) -> dict[str, dict]:
+        """Most recent state snapshot per stream_key from the sink.
+
+        The snapshot for a key is its row from the highest epoch (update
+        mode emits one row per touched key per epoch), epoch included.
+        Only one row per distinct key reaches the driver; the sink grows
+        with epochs, the result does not."""
+        latest = self._latest_dicts(
+            "n_records", "value_cents_total", "last_id", "deleted", "epoch"
+        )
+        return {k: {"stream_key": k, **v} for k, v in latest.items()}
+
+    # -- TTL expiry (expiry-driven events, KeySpace_Triggers.md:11-13) -------
+
+    def expire_idle(self, ttl_seconds: float) -> list[str]:
+        """Expire keys idle longer than `ttl_seconds`: emit a `del`
+        tombstone per idle key into the spool, so the stateful operator
+        drops their state through the normal deletion path and the sink
+        records a final `deleted` snapshot. Run as a maintenance step (the
+        reference also defers expiry/trim to post-notification jobs rather
+        than doing it inline). Returns the expired keys; drain the query
+        afterwards to apply.
+
+        Limit: a key's idle time is measured from the wall-clock of its
+        last epoch as recorded by THIS process, in memory. After a
+        restart, a key whose last epoch was committed before the restart
+        is never expired here until new data gives it a fresh epoch."""
+        now, seen = time.time(), self._epoch_seen
+        expired = [
+            (key, rec["last_id"] + 1)
+            for key, rec in self.latest().items()
+            if not rec["deleted"]
+            and rec["epoch"] in seen
+            and now - seen[rec["epoch"]] > ttl_seconds
+        ]
+        if expired:
+            _spool_tombstones(self.spark, self.spool_dir, expired)
+        return [key for key, _ in expired]
 
 
 # ---------------------------------------------------------------------------
@@ -539,7 +576,7 @@ def _make_hh_reducer(field: str, cap: int, topk: int):
     return reducer
 
 
-class StreamingHeavyHittersRuntime(StatefulStatsRuntime):
+class StreamingHeavyHittersRuntime(StatefulRuntime):
     """Per-stream-key streaming heavy hitters: a Misra-Gries summary per
     key in the state store, the current top-k emitted every micro-batch.
     The batch two-phase MG (text_heavy_hitters) answers "top items ever";
@@ -549,6 +586,12 @@ class StreamingHeavyHittersRuntime(StatefulStatsRuntime):
 
     State per key is ≤ `cap` counters; total state O(|keys| * cap).
     """
+
+    SPEC = StatefulSpec(
+        "hh", "streaming_heavy_hitters",
+        lambda rt: _make_hh_reducer(rt.field, rt.cap, rt.topk),
+        _HH_OUTPUT_SCHEMA, _HH_STATE_SCHEMA,
+    )
 
     def __init__(
         self,
@@ -564,23 +607,6 @@ class StreamingHeavyHittersRuntime(StatefulStatsRuntime):
         self.field = field
         self.cap = cap
         self.topk = topk
-
-    @property
-    def _ckpt_dir(self) -> str:  # separate checkpoint from the stats query
-        return os.path.join(self.work_dir, "hh_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "hh_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_hh_reducer(self.field, self.cap, self.topk),
-            _HH_OUTPUT_SCHEMA,
-            _HH_STATE_SCHEMA,
-            "streaming_heavy_hitters",
-            prefix,
-        )
 
     def top(self) -> dict[str, list[tuple[str, int]]]:
         """Latest top-k per stream_key: rows from each key's highest
@@ -606,24 +632,6 @@ class StreamingHeavyHittersRuntime(StatefulStatsRuntime):
                 (r["item"], r["est_count"])
             )
         return out
-
-    # The inherited stats surface does not apply here: the hh sink rows
-    # (stream_key, item, est_count, n_records, rank, epoch) carry no
-    # `deleted`/`last_id` columns, so the base latest()/expire_idle()
-    # would crash mid-iteration. Fail loudly with the right API instead.
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingHeavyHittersRuntime has no per-key stats snapshot — "
-            "use top() for the current top-k per stream_key"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the heavy-hitters runtime "
-            "(its state is bounded Misra-Gries counters, not per-key "
-            "stats with tombstones); stop()/flush() clear state"
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -702,7 +710,7 @@ def _make_sessionizer(gap: int):
     return sessionize
 
 
-class StreamingSessionizeRuntime(StatefulStatsRuntime):
+class StreamingSessionizeRuntime(StatefulRuntime):
     """Streaming gap sessionization — the batch `session_windows` query's
     continuous twin: per stream_key, group consecutive records whose id
     gap stays within `gap`, emitting each session exactly once when it
@@ -713,7 +721,12 @@ class StreamingSessionizeRuntime(StatefulStatsRuntime):
     axis: ms*2^20+seq); pass `gap` in the same packed units.
     """
 
-    _SINK_EVENT_LOG = True  # closed-session log: one row per session; compaction would destroy it
+    SPEC = StatefulSpec(
+        "sess", "streaming_sessionize",
+        lambda rt: _make_sessionizer(rt.gap),
+        _SESS_OUTPUT_SCHEMA, _SESS_STATE_SCHEMA,
+        event_log=True,  # closed-session log: one row per session
+    )
 
     def __init__(
         self,
@@ -726,64 +739,15 @@ class StreamingSessionizeRuntime(StatefulStatsRuntime):
         super().__init__(engine, spool_dir, work_dir, source_adapter)
         self.gap = gap
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "sess_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "sess_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_sessionizer(self.gap),
-            _SESS_OUTPUT_SCHEMA,
-            _SESS_STATE_SCHEMA,
-            "streaming_sessionize",
-            prefix,
-        )
-
     def close_key(self, stream_key: str, at_id: int) -> None:
         """Force-close a key's open session by emitting the `del`
         control record into the spool (the deferred-job pattern the
         stats runtime uses for expiry); drain the query to apply."""
-        from redisgears_spark.streaming.triggers import STREAM_SCHEMA
-
-        row = {
-            "stream_key": stream_key,
-            "id": at_id,
-            "id_ts": pd.Timestamp("2024-01-01"),
-            "fields": {_CTL_FIELD: _CTL_DELETE},
-            "record": None,
-        }
-        self.spark.createDataFrame(
-            pd.DataFrame([row]), STREAM_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(self.spool_dir)
+        _spool_tombstones(self.spark, self.spool_dir, [(stream_key, at_id)])
 
     def sessions(self) -> list[dict]:
         """All closed sessions, ordered (each was emitted exactly once)."""
-        df = self._sink_df()
-        if df is None:
-            return []
-        out = [r.asDict() for r in df.collect()]
-        out.sort(
-            key=lambda r: (r["stream_key"], r["session_start_id"])
-        )
-        return out
-
-    # closed-session sinks have no deleted/last_id columns; the base
-    # stats surface would crash — fail loudly with the right API
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingSessionizeRuntime has no stats snapshot — use "
-            "sessions() for the closed-session log"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the sessionize runtime — "
-            "close_key() force-closes an open session"
-        )
+        return self._log_rows("stream_key", "session_start_id")
 
 
 # ---------------------------------------------------------------------------
@@ -834,7 +798,7 @@ def _make_rate_limiter(window: int, limit: int):
     return rate_limit
 
 
-class StreamingRateLimitRuntime(StatefulStatsRuntime):
+class StreamingRateLimitRuntime(StatefulRuntime):
     """Continuous sliding-window rate limiting — THE canonical RedisGears
     recipe (a keyspace trigger bumping a windowed per-key counter), here
     as a stateful streaming operator: per stream_key, admit a record iff
@@ -846,7 +810,12 @@ class StreamingRateLimitRuntime(StatefulStatsRuntime):
     checkpointed, so quota survives restarts.
     """
 
-    _SINK_EVENT_LOG = True  # verdict log: one row per record; compaction would destroy it
+    SPEC = StatefulSpec(
+        "rl", "streaming_rate_limit",
+        lambda rt: _make_rate_limiter(rt.window, rt.limit),
+        _RL_OUTPUT_SCHEMA, _RL_STATE_SCHEMA,
+        event_log=True,  # verdict log: one row per record
+    )
 
     def __init__(
         self,
@@ -861,44 +830,9 @@ class StreamingRateLimitRuntime(StatefulStatsRuntime):
         self.window = window
         self.limit = limit
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "rl_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "rl_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_rate_limiter(self.window, self.limit),
-            _RL_OUTPUT_SCHEMA,
-            _RL_STATE_SCHEMA,
-            "streaming_rate_limit",
-            prefix,
-        )
-
     def decisions(self) -> list[dict]:
         """All admit/throttle decisions, (stream_key, id)-ordered."""
-        df = self._sink_df()
-        if df is None:
-            return []
-        out = [r.asDict() for r in df.collect()]
-        out.sort(key=lambda r: (r["stream_key"], r["id"]))
-        return out
-
-    # decision sinks have no deleted/last_id columns; fail loudly
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingRateLimitRuntime has no stats snapshot — use "
-            "decisions() for the admit/throttle log"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the rate-limit runtime — "
-            "state is already bounded at `limit` ids per key"
-        )
+        return self._log_rows("stream_key", "id")
 
 
 # ---------------------------------------------------------------------------
@@ -955,7 +889,7 @@ def _make_cusum(allowance_cents: int, threshold_cents: int):
     return cusum
 
 
-class StreamingCusumRuntime(StatefulStatsRuntime):
+class StreamingCusumRuntime(StatefulRuntime):
     """Continuous CUSUM drift detection per stream key — the online form
     of `events_cusum_drift`: the batch operator must distribute the
     recurrence through its prefix closed form, while the stream keeps
@@ -969,7 +903,12 @@ class StreamingCusumRuntime(StatefulStatsRuntime):
     level being monitored).
     """
 
-    _SINK_EVENT_LOG = True  # score log: one row per record; compaction would destroy it
+    SPEC = StatefulSpec(
+        "cusum", "streaming_cusum",
+        lambda rt: _make_cusum(rt.allowance_cents, rt.threshold_cents),
+        _CUSUM_OUTPUT_SCHEMA, _CUSUM_STATE_SCHEMA,
+        event_log=True,  # score log: one row per record
+    )
 
     def __init__(
         self,
@@ -984,31 +923,9 @@ class StreamingCusumRuntime(StatefulStatsRuntime):
         self.allowance_cents = allowance_cents
         self.threshold_cents = threshold_cents
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "cusum_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "cusum_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_cusum(self.allowance_cents, self.threshold_cents),
-            _CUSUM_OUTPUT_SCHEMA,
-            _CUSUM_STATE_SCHEMA,
-            "streaming_cusum",
-            prefix,
-        )
-
     def scores(self) -> list[dict]:
         """All per-record CUSUM scores, (stream_key, id)-ordered."""
-        df = self._sink_df()
-        if df is None:
-            return []
-        out = [r.asDict() for r in df.collect()]
-        out.sort(key=lambda r: (r["stream_key"], r["id"]))
-        return out
+        return self._log_rows("stream_key", "id")
 
 
 # ---------------------------------------------------------------------------
@@ -1094,7 +1011,7 @@ def _make_hll_reducer(field: str, p: int):
     return reducer
 
 
-class StreamingDistinctRuntime(StatefulStatsRuntime):
+class StreamingDistinctRuntime(StatefulRuntime):
     """Per-stream-key streaming distinct count: one HyperLogLog per key
     in the state store, the current estimate emitted every micro-batch.
     The batch trio (events_hll_user_estimate) answers "how many distinct
@@ -1112,6 +1029,12 @@ class StreamingDistinctRuntime(StatefulStatsRuntime):
     cardinalities raise p like the batch hll_distinct(m) widths.
     """
 
+    SPEC = StatefulSpec(
+        "hll", "streaming_hll_distinct",
+        lambda rt: _make_hll_reducer(rt.field, rt.p),
+        _HLLS_OUTPUT_SCHEMA, _HLLS_STATE_SCHEMA,
+    )
+
     def __init__(
         self,
         engine: GearsEngine,
@@ -1127,64 +1050,9 @@ class StreamingDistinctRuntime(StatefulStatsRuntime):
         self.field = field
         self.p = p
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "hll_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "hll_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_hll_reducer(self.field, self.p),
-            _HLLS_OUTPUT_SCHEMA,
-            _HLLS_STATE_SCHEMA,
-            "streaming_hll_distinct",
-            prefix,
-        )
-
     def estimates(self) -> dict[str, dict]:
         """Latest estimate per stream_key (highest committed epoch)."""
-        df = self._sink_df()
-        if df is None:
-            return {}
-        rows = (
-            df.groupBy("stream_key")
-            .agg(
-                F.max_by(
-                    F.struct("estimate", "n_records", "n_zero_registers"),
-                    F.col("epoch"),
-                ).alias("s")
-            )
-            .select("stream_key", "s.*")
-            .collect()
-        )
-        return {
-            r["stream_key"]: {
-                "estimate": r["estimate"],
-                "n_records": r["n_records"],
-                "n_zero_registers": r["n_zero_registers"],
-            }
-            for r in rows
-        }
-
-    # the HLL sink rows carry no deleted/last_id columns; the base stats
-    # surface cannot apply — fail loudly with the right API (the same
-    # contract as the heavy-hitters runtime).
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingDistinctRuntime has no per-key stats snapshot — "
-            "use estimates() for the current distinct estimates"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming-distinct "
-            "runtime (its state is an HLL register array, not per-key "
-            "stats with tombstones); stop()/flush() clear state"
-        )
+        return self._latest_dicts("estimate", "n_records", "n_zero_registers")
 
 
 # ---------------------------------------------------------------------------
@@ -1272,7 +1140,7 @@ def _make_kmv_reducer(field: str, k: int):
     return reducer
 
 
-class StreamingKmvRuntime(StatefulStatsRuntime):
+class StreamingKmvRuntime(StatefulRuntime):
     """Per-stream-key streaming distinct count via K-minimum-values: the
     k smallest distinct 32-bit md5-prefix hashes per key live in the
     state store; the estimate is the batch kmv_distinct order statistic.
@@ -1290,6 +1158,12 @@ class StreamingKmvRuntime(StatefulStatsRuntime):
     pinned against the batch builder in tests.
     """
 
+    SPEC = StatefulSpec(
+        "kmv", "streaming_kmv_distinct",
+        lambda rt: _make_kmv_reducer(rt.field, rt.k),
+        _KMVS_OUTPUT_SCHEMA, _KMVS_STATE_SCHEMA,
+    )
+
     def __init__(
         self,
         engine: GearsEngine,
@@ -1305,61 +1179,9 @@ class StreamingKmvRuntime(StatefulStatsRuntime):
         self.field = field
         self.k = k
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "kmv_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "kmv_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_kmv_reducer(self.field, self.k),
-            _KMVS_OUTPUT_SCHEMA,
-            _KMVS_STATE_SCHEMA,
-            "streaming_kmv_distinct",
-            prefix,
-        )
-
     def estimates(self) -> dict[str, dict]:
         """Latest estimate per stream_key (highest committed epoch)."""
-        df = self._sink_df()
-        if df is None:
-            return {}
-        rows = (
-            df.groupBy("stream_key")
-            .agg(
-                F.max_by(
-                    F.struct("estimate", "n_records", "n_in_sketch", "kth_h"),
-                    F.col("epoch"),
-                ).alias("s")
-            )
-            .select("stream_key", "s.*")
-            .collect()
-        )
-        return {
-            r["stream_key"]: {
-                "estimate": r["estimate"],
-                "n_records": r["n_records"],
-                "n_in_sketch": r["n_in_sketch"],
-                "kth_h": r["kth_h"],
-            }
-            for r in rows
-        }
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingKmvRuntime has no per-key stats snapshot — use "
-            "estimates() for the current distinct estimates"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming-KMV runtime "
-            "(its state is a k-minimum hash list, not per-key stats "
-            "with tombstones); stop()/flush() clear state"
-        )
+        return self._latest_dicts("estimate", "n_records", "n_in_sketch", "kth_h")
 
 
 # ---------------------------------------------------------------------------
@@ -1447,7 +1269,7 @@ def _make_hsq_reducer(id_field: str, value_field: str, k: int):
     return reducer
 
 
-class StreamingQuantileRuntime(StatefulStatsRuntime):
+class StreamingQuantileRuntime(StatefulRuntime):
     """Per-stream-key streaming quantiles via the bottom-k-by-hash row
     sample: the k rows whose md5 hash of `id_field` is smallest live in
     the state store with their integer `value_field`; quantiles are
@@ -1468,6 +1290,12 @@ class StreamingQuantileRuntime(StatefulStatsRuntime):
     beyond-reference operator for the training-data-pipeline tier.
     """
 
+    SPEC = StatefulSpec(
+        "hsq", "streaming_hash_sample_quantiles",
+        lambda rt: _make_hsq_reducer(rt.id_field, rt.value_field, rt.k),
+        _HSQS_OUTPUT_SCHEMA, _HSQS_STATE_SCHEMA,
+    )
+
     def __init__(
         self,
         engine: GearsEngine,
@@ -1485,60 +1313,10 @@ class StreamingQuantileRuntime(StatefulStatsRuntime):
         self.value_field = value_field
         self.k = k
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "hsq_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "hsq_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_hsq_reducer(self.id_field, self.value_field, self.k),
-            _HSQS_OUTPUT_SCHEMA,
-            _HSQS_STATE_SCHEMA,
-            "streaming_hash_sample_quantiles",
-            prefix,
-        )
-
     def quantiles(self) -> dict[str, dict]:
         """Latest quantile row per stream_key (highest committed epoch)."""
-        df = self._sink_df()
-        if df is None:
-            return {}
-        rows = (
-            df.groupBy("stream_key")
-            .agg(
-                F.max_by(
-                    F.struct(
-                        "n_records", "n_sample", "p25", "p50", "p75", "p90"
-                    ),
-                    F.col("epoch"),
-                ).alias("s")
-            )
-            .select("stream_key", "s.*")
-            .collect()
-        )
-        return {
-            r["stream_key"]: {
-                c: r[c]
-                for c in ("n_records", "n_sample", "p25", "p50", "p75", "p90")
-            }
-            for r in rows
-        }
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingQuantileRuntime has no per-key stats snapshot — use "
-            "quantiles() for the current sample quantiles"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming-quantile "
-            "runtime (its state is a k-minimum sample list, not per-key "
-            "stats with tombstones); stop()/flush() clear state"
+        return self._latest_dicts(
+            "n_records", "n_sample", "p25", "p50", "p75", "p90"
         )
 
 
@@ -1635,7 +1413,7 @@ def _make_bloom_dedup(field: str, m: int, k: int):
     return reducer
 
 
-class StreamingBloomDedupRuntime(StatefulStatsRuntime):
+class StreamingBloomDedupRuntime(StatefulRuntime):
     """Continuous first-seen deduplication per stream_key — the streaming
     half of the dedup family (operators/dedup.py is the batch half): an
     m-bit / k-hash Bloom filter lives in the state store and every
@@ -1666,7 +1444,12 @@ class StreamingBloomDedupRuntime(StatefulStatsRuntime):
     recipe with bounded memory and checkpointed state.
     """
 
-    _SINK_EVENT_LOG = True  # verdict log: one row per record; compaction would destroy it
+    SPEC = StatefulSpec(
+        "bloomdedup", "streaming_bloom_dedup",
+        lambda rt: _make_bloom_dedup(rt.field, rt.m, rt.k),
+        _BLOOMS_OUTPUT_SCHEMA, _BLOOMS_STATE_SCHEMA,
+        event_log=True,  # verdict log: one row per record
+    )
 
     def __init__(
         self,
@@ -1688,23 +1471,6 @@ class StreamingBloomDedupRuntime(StatefulStatsRuntime):
         self.field = field
         self.m = m
         self.k = k
-
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "bloomdedup_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "bloomdedup_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_bloom_dedup(self.field, self.m, self.k),
-            _BLOOMS_OUTPUT_SCHEMA,
-            _BLOOMS_STATE_SCHEMA,
-            "streaming_bloom_dedup",
-            prefix,
-        )
 
     def verdicts(self) -> DataFrame | None:
         """All per-record verdicts committed so far (epoch-stamped), or
@@ -1747,20 +1513,6 @@ class StreamingBloomDedupRuntime(StatefulStatsRuntime):
             }
             for r in rows
         }
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingBloomDedupRuntime has no per-key stats snapshot — "
-            "use dedup_stats() for totals or verdicts() for the deduped "
-            "stream"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming Bloom dedup "
-            "runtime (dropping a filter would re-admit duplicates); "
-            "stop()/flush() clear state"
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -1876,7 +1628,7 @@ def _make_minhash_reducer(field: str):
     return reducer
 
 
-class StreamingMinHashRuntime(StatefulStatsRuntime):
+class StreamingMinHashRuntime(StatefulRuntime):
     """Per-stream-key continuous MinHash signature — the live half of the
     near-duplicate family (operators/dedup's MinHash+LSH is the batch
     half): every key's 32-component signature over the VALUES of `field`
@@ -1902,6 +1654,12 @@ class StreamingMinHashRuntime(StatefulStatsRuntime):
     many values flow past — the firehose-safe shape.
     """
 
+    SPEC = StatefulSpec(
+        "minhash", "streaming_minhash",
+        lambda rt: _make_minhash_reducer(rt.field),
+        _MHS_OUTPUT_SCHEMA, _MHS_STATE_SCHEMA,
+    )
+
     def __init__(
         self,
         engine: GearsEngine,
@@ -1913,23 +1671,6 @@ class StreamingMinHashRuntime(StatefulStatsRuntime):
         super().__init__(engine, spool_dir, work_dir, source_adapter)
         self.field = field
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "minhash_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "minhash_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_minhash_reducer(self.field),
-            _MHS_OUTPUT_SCHEMA,
-            _MHS_STATE_SCHEMA,
-            "streaming_minhash",
-            prefix,
-        )
-
     def signatures(self) -> dict[str, dict]:
         """Latest signature + band hashes per stream_key (highest
         committed epoch). Values: n_records, n_items, signature
@@ -1937,29 +1678,11 @@ class StreamingMinHashRuntime(StatefulStatsRuntime):
         band hashes, batch-compatible)."""
         import json as _json
 
-        df = self._sink_df()
-        if df is None:
-            return {}
-        rows = (
-            df.groupBy("stream_key")
-            .agg(
-                F.max_by(
-                    F.struct("n_records", "n_items", "signature", "bands"),
-                    F.col("epoch"),
-                ).alias("s")
-            )
-            .select("stream_key", "s.*")
-            .collect()
-        )
-        return {
-            r["stream_key"]: {
-                "n_records": r["n_records"],
-                "n_items": r["n_items"],
-                "signature": _json.loads(r["signature"]),
-                "bands": _json.loads(r["bands"]),
-            }
-            for r in rows
-        }
+        out = self._latest_dicts("n_records", "n_items", "signature", "bands")
+        for v in out.values():
+            v["signature"] = _json.loads(v["signature"])
+            v["bands"] = _json.loads(v["bands"])
+        return out
 
     def similarity(self, key_a: str, key_b: str) -> float:
         """MinHash Jaccard estimate between two stream keys: matching
@@ -1974,16 +1697,3 @@ class StreamingMinHashRuntime(StatefulStatsRuntime):
             )
         a, b = sigs[key_a]["signature"], sigs[key_b]["signature"]
         return sum(1 for x, y in zip(a, b) if x == y) / float(_MH_N)
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingMinHashRuntime has no per-key stats snapshot — use "
-            "signatures() for the current sketches"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming-MinHash "
-            "runtime (its state is a min-signature, not per-key stats "
-            "with tombstones); stop()/flush() clear state"
-        )

@@ -40,18 +40,16 @@ Design:
 from __future__ import annotations
 
 import json as _json
-import os
 import re
 from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from redisgears_spark.engine import GearsEngine, GearsError
-from redisgears_spark.streaming.stateful import StatefulStatsRuntime
+from redisgears_spark.streaming.stateful import StatefulRuntime, StatefulSpec
 
 _WF_OUTPUT_SCHEMA = (
     "bucket long, n_docs bigint, words array<string>, freqs array<bigint>"
@@ -167,7 +165,7 @@ def _make_bucket_reducer():
     return reducer
 
 
-class StreamingWordFreqRuntime(StatefulStatsRuntime):
+class StreamingWordFreqRuntime(StatefulRuntime):
     """Continuously-maintained word-frequency table over a document
     stream — the live vocabulary state pipeline_bpe_extend consumes.
 
@@ -175,7 +173,15 @@ class StreamingWordFreqRuntime(StatefulStatsRuntime):
     in ``fields[id_field]``. See the module docstring for the contract.
     """
 
-    _SINK_KEY = ("bucket",)  # sink snapshots key on the bucket space
+    SPEC = StatefulSpec(
+        "wf", "streaming_word_freq",
+        lambda rt: _make_bucket_reducer(),
+        _WF_OUTPUT_SCHEMA, _WF_STATE_SCHEMA,
+        key="bucket",
+        router=lambda rt: _make_router(rt.text_field, rt.id_field, rt.n_buckets),
+        routed_schema=_ROUTED_SCHEMA,
+        key_cap=lambda rt: rt.n_buckets,  # state keys are the buckets
+    )
 
     def __init__(
         self,
@@ -186,55 +192,11 @@ class StreamingWordFreqRuntime(StatefulStatsRuntime):
         text_field: str = "text",
         id_field: str = "doc_id",
         n_buckets: int = 32,
-        files_per_trigger: int | None = None,
     ):
-        super().__init__(engine, spool_dir, work_dir, source_adapter,
-                         files_per_trigger=files_per_trigger)
+        super().__init__(engine, spool_dir, work_dir, source_adapter)
         self.text_field = text_field
         self.id_field = id_field
         self.n_buckets = n_buckets
-        self._state_key_cap = n_buckets  # bounded key space (buckets)
-
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "wf_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "wf_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        src = self._source()
-        if prefix:
-            src = src.filter(F.col("stream_key").startswith(prefix))
-        routed = src.select("id", "fields").mapInPandas(
-            _make_router(self.text_field, self.id_field, self.n_buckets),
-            _ROUTED_SCHEMA,
-        )
-        out = routed.groupBy("bucket").applyInPandasWithState(
-            _make_bucket_reducer(),
-            _WF_OUTPUT_SCHEMA,
-            _WF_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        os.makedirs(self.sink_dir, exist_ok=True)
-        sink_dir = self.sink_dir
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(sink_dir)
-
-        with self._sized_state_shuffle():
-            self.query = (
-                out.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", self._ckpt_dir)
-                .outputMode("update")
-                .queryName("streaming_word_freq")
-                .start()
-            )
-        return self.query
 
     def word_freq(self) -> DataFrame:
         """The live frequency table as (word, freq, symbols) rows — the
@@ -242,21 +204,12 @@ class StreamingWordFreqRuntime(StatefulStatsRuntime):
         BPE machinery consumes either source interchangeably. Buckets
         partition DOCUMENTS, so a word's total is the sum of its
         per-bucket partials (one word-keyed aggregate, JVM-side)."""
-        df = self._sink_df()
-        if df is None:
+        latest = self._latest_rows("n_docs", "words", "freqs")
+        if latest is None:
             raise GearsError(
                 "streaming word-freq state is empty — ingest documents "
                 "and process_available() first"
             )
-        latest = (
-            df.groupBy("bucket")
-            .agg(
-                F.max_by(
-                    F.struct("n_docs", "words", "freqs"), F.col("epoch")
-                ).alias("s")
-            )
-            .select("bucket", "s.*")
-        )
         return (
             latest.select(
                 F.explode(F.arrays_zip("words", "freqs")).alias("z")
@@ -268,18 +221,4 @@ class StreamingWordFreqRuntime(StatefulStatsRuntime):
             .groupBy("word")
             .agg(F.sum("freq").alias("freq"))
             .select("word", "freq", F.split("word", "").alias("symbols"))
-        )
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingWordFreqRuntime has no per-key stats snapshot — "
-            "use word_freq()"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming word-freq "
-            "runtime (state is a frequency table, not per-key stats); "
-            "emit `del` tombstones to remove documents, stop()/flush() "
-            "to clear"
         )

@@ -653,6 +653,72 @@ class TestStatefulStats:
             rt3.stop()
 
 
+# every stateful runtime: (class, checkpoint/sink directory prefix, query
+# name, event-log sink). Directory and query names are on-disk contracts —
+# a checkpoint written by an earlier build must resume under this one.
+_STATEFUL_RUNTIMES = [
+    ("StatefulStatsRuntime", "stateful", "stateful_stats", False),
+    ("StreamingHeavyHittersRuntime", "hh", "streaming_heavy_hitters", False),
+    ("StreamingSessionizeRuntime", "sess", "streaming_sessionize", True),
+    ("StreamingRateLimitRuntime", "rl", "streaming_rate_limit", True),
+    ("StreamingCusumRuntime", "cusum", "streaming_cusum", True),
+    ("StreamingDistinctRuntime", "hll", "streaming_hll_distinct", False),
+    ("StreamingKmvRuntime", "kmv", "streaming_kmv_distinct", False),
+    (
+        "StreamingQuantileRuntime",
+        "hsq",
+        "streaming_hash_sample_quantiles",
+        False,
+    ),
+    ("StreamingBloomDedupRuntime", "bloomdedup", "streaming_bloom_dedup", True),
+    ("StreamingMinHashRuntime", "minhash", "streaming_minhash", False),
+    ("StreamingAnnIvfRuntime", "ann", "streaming_ann_ivf", False),
+    ("StreamingShingleIndexRuntime", "shidx", "streaming_shingle_index", False),
+    ("StreamingWordFreqRuntime", "wf", "streaming_word_freq", False),
+]
+
+
+class TestStatefulRuntimeSurface:
+    @pytest.mark.parametrize(
+        "name,prefix,query,event_log",
+        _STATEFUL_RUNTIMES,
+        ids=[r[0] for r in _STATEFUL_RUNTIMES],
+    )
+    def test_runtime_surface(
+        self, spark, sf_dir, spool, work, name, prefix, query, event_log
+    ):
+        """Each runtime carries only the read APIs its sink supports:
+        latest()/expire_idle() read the running-stats sink's
+        deleted/last_id columns, so only StatefulStatsRuntime has them.
+        compact_sink() refuses exactly the event-log sinks. Checkpoint
+        dir, sink dir and query name stay as they were."""
+        import redisgears_spark.streaming as streaming_mod
+
+        cls = getattr(streaming_mod, name)
+        is_stats = name == "StatefulStatsRuntime"
+        assert hasattr(cls, "latest") is is_stats
+        assert hasattr(cls, "expire_idle") is is_stats
+
+        extra = (
+            {"centroids": [[1.0, 0.0]]}
+            if name == "StreamingAnnIvfRuntime"
+            else {}
+        )
+        rt = cls(GearsEngine(spark, sf_dir), spool, work, **extra)
+        assert rt._ckpt_dir == os.path.join(work, f"{prefix}_ckpt")
+        assert rt.sink_dir == os.path.join(work, f"{prefix}_sink")
+        os.makedirs(spool, exist_ok=True)
+        try:
+            assert rt.start().name == query
+        finally:
+            rt.stop()
+        if event_log:
+            with pytest.raises(GearsError, match="event log"):
+                rt.compact_sink()
+        else:
+            assert rt.compact_sink() == 0  # empty sink: nothing to rewrite
+
+
 class TestKeyspaceTriggers:
     def test_cdc_trigger_with_snapshot(self, spark, sf_dir, tmp_path):
         engine = GearsEngine(spark, sf_dir)
@@ -2456,21 +2522,6 @@ class TestStreamingHeavyHitters:
             assert entries[0][1] > n_before[k]
 
 
-class TestHeavyHittersApiSurface:
-    def test_inherited_stats_api_fails_loudly(self, spark, sf_dir, spool, work):
-        """The hh sink has no deleted/last_id columns, so the base
-        class's latest()/expire_idle() cannot apply — they must raise a
-        clear GearsError, not crash mid-iteration with a KeyError."""
-        from redisgears_spark.streaming import StreamingHeavyHittersRuntime
-
-        engine = GearsEngine(spark, sf_dir)
-        rt = StreamingHeavyHittersRuntime(engine, spool, work, field="item")
-        with pytest.raises(GearsError, match="use top\\(\\)"):
-            rt.latest()
-        with pytest.raises(GearsError, match="not supported"):
-            rt.expire_idle(60)
-
-
 class TestSinkCompactionSafety:
     """compact_sink() must be lossless for snapshot sinks and REFUSED for
     event-log sinks — never a silent history wipe (docs/INCREMENTAL.md
@@ -2638,16 +2689,6 @@ class TestStreamingSessionize:
             (s["session_start_id"], s["session_end_id"], s["n_events"])
             for s in got
         ] == [(1, 2, 2)]
-
-    def test_stats_api_fails_loudly(self, spark, sf_dir, spool, work):
-        from redisgears_spark.streaming import StreamingSessionizeRuntime
-
-        engine = GearsEngine(spark, sf_dir)
-        rt = StreamingSessionizeRuntime(engine, spool, work)
-        with pytest.raises(GearsError, match="sessions\\(\\)"):
-            rt.latest()
-        with pytest.raises(GearsError, match="close_key"):
-            rt.expire_idle(60)
 
 
 class TestStreamingRateLimit:
@@ -2882,6 +2923,35 @@ class TestStreamingCusum:
         # 4900 carried through the checkpoint: 4900 + 100 - 100 = 4900
         assert got == {1: 4900, 2: 4900}
 
+    def test_score_log_has_no_stats_api(self, spark, sf_dir, spool, work):
+        """Regression: CUSUM once inherited the running-stats API. Its
+        expire_idle() crashed with KeyError('deleted') and its latest()
+        returned one arbitrary per-record row of the key's last epoch
+        (max_by on an epoch that ties within the epoch). The score log
+        is read through scores(), which keeps every record."""
+        from redisgears_spark.streaming import StreamingCusumRuntime
+
+        rt = StreamingCusumRuntime(
+            GearsEngine(spark, sf_dir), spool, work,
+            allowance_cents=0, threshold_cents=10_000,
+        )
+        _write_canonical(
+            spark, spool,
+            [("k:1", 1, {"value": "1.0"}), ("k:1", 2, {"value": "2.0"})],
+        )
+        rt.start()
+        try:
+            rt.process_available()
+        finally:
+            rt.stop()
+        assert [(r["id"], r["cusum_cents"]) for r in rt.scores()] == [
+            (1, 100),
+            (2, 300),
+        ]
+        for api in ("latest", "expire_idle"):
+            with pytest.raises(AttributeError):
+                getattr(rt, api)
+
 
 class TestStreamingDistinct:
     """Streaming HLL per stream_key: merge-order-free registers, state
@@ -2975,11 +3045,6 @@ class TestStreamingDistinct:
         from redisgears_spark.streaming import StreamingDistinctRuntime
 
         engine = GearsEngine(spark, sf_dir)
-        rt = StreamingDistinctRuntime(engine, spool, work, field="u")
-        with pytest.raises(GearsError, match="use estimates\\(\\)"):
-            rt.latest()
-        with pytest.raises(GearsError, match="not supported"):
-            rt.expire_idle(60)
         with pytest.raises(GearsError, match="p must be"):
             StreamingDistinctRuntime(engine, spool, work, field="u", p=20)
 
@@ -3081,11 +3146,6 @@ class TestStreamingKmv:
         from redisgears_spark.streaming import StreamingKmvRuntime
 
         engine = GearsEngine(spark, sf_dir)
-        rt = StreamingKmvRuntime(engine, spool, work, field="u")
-        with pytest.raises(GearsError, match="use estimates\\(\\)"):
-            rt.latest()
-        with pytest.raises(GearsError, match="not supported"):
-            rt.expire_idle(60)
         with pytest.raises(GearsError, match="k >= 2"):
             StreamingKmvRuntime(engine, spool, work, field="u", k=1)
 
@@ -3177,11 +3237,6 @@ class TestStreamingQuantiles:
         from redisgears_spark.streaming import StreamingQuantileRuntime
 
         engine = GearsEngine(spark, sf_dir)
-        rt = StreamingQuantileRuntime(engine, spool, work)
-        with pytest.raises(GearsError, match="use quantiles\\(\\)"):
-            rt.latest()
-        with pytest.raises(GearsError, match="not supported"):
-            rt.expire_idle(60)
         with pytest.raises(GearsError, match="k >= 1"):
             StreamingQuantileRuntime(engine, spool, work, k=0)
 
@@ -3360,10 +3415,6 @@ class TestStreamingBloomDedup:
         assert rows[0]["item"] is None and rows[0]["first_seen"] is True
         assert rows[1]["first_seen"] is True
         assert rows[2]["first_seen"] is False
-        with _pytest.raises(GearsError, match="dedup_stats"):
-            rt.latest()
-        with _pytest.raises(GearsError, match="not supported"):
-            rt.expire_idle(60)
 
 
 class TestBloomDedupFixtureIntegration:
@@ -3568,16 +3619,3 @@ class TestStreamingMinHash:
 
         with _pytest.raises(GearsError, match="no MinHash signature"):
             rt.similarity("k:a", "k:missing")
-
-    def test_unsupported_surfaces_raise(self, spark, sf_dir, spool, work):
-        import pytest as _pytest
-
-        from redisgears_spark.streaming import StreamingMinHashRuntime
-
-        rt = StreamingMinHashRuntime(
-            GearsEngine(spark, sf_dir), spool, work
-        )
-        with _pytest.raises(GearsError, match="signatures"):
-            rt.latest()
-        with _pytest.raises(GearsError, match="not supported"):
-            rt.expire_idle(60)

@@ -443,8 +443,8 @@ def test_compact_sink_shingle_index_screen_unchanged(
 
 
 def test_compact_sink_stream_key_runtime(spark, sf_dir, tmp_path):
-    """compact_sink() on a stream_key-keyed runtime (the default
-    _SINK_KEY): MinHash signatures are unchanged after compaction."""
+    """compact_sink() on a stream_key-keyed runtime (the default group
+    key): MinHash signatures are unchanged after compaction."""
     from redisgears_spark.streaming import StreamingMinHashRuntime
     from redisgears_spark.streaming.triggers import STREAM_SCHEMA
 
